@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * `iterationTimes` (training only; its CoreNLP preprocessing is
   * outside that number).
   *
-  * Usage: runMain graft.BookBench [booksDir] [stopwordsFile]
+  * Usage: SPARK_GRAFT_CPUS=n runMain graft.BookBench [booksDir] [stopwordsFile]
+  * (n cores and n shuffle partitions, default 4, as graft.Bench and
+  * graft.Verify)
   */
 object BookBench {
   def main(args: Array[String]): Unit = {
@@ -19,8 +21,9 @@ object BookBench {
       "/root/reference/TextClustering/src/main/resources/books/English")
     val stopFile = if (args.length > 1) args(1)
       else "/root/reference/TextClustering/src/main/resources/stopWords_EN.txt"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -39,11 +42,9 @@ object BookBench {
     val docs = Pipeline.withDocIds(CorpusReader.readBooks(spark, books))
     val tokens = Pipeline.prepTokens(docs, stops).cache()
     val nDocs = tokens.count() // materialize prep
-    val counts = Vectorize.wordCounts(tokens)
-    val vocab = Vectorize.buildVocab(counts, 2900000)
-    val tf = Vectorize.countVectors(tokens, vocab)
-    val idf = Vectorize.fitIdf(tf).idf.toArray
-    val corpus = Vectorize.tfidfWithFloor(spark, tf, idf).coalesce(8).cache()
+    val tfIdf = Vectorize.fit(tokens, 2900000)
+    val vocab = tfIdf.vocab
+    val corpus = Vectorize.flooredTfIdf(tokens, vocab, tfIdf.idf).coalesce(8).cache()
     corpus.count()
     val tPrep = (System.nanoTime() - t0) / 1e9
 

@@ -1,6 +1,9 @@
 package graft.ml
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.ml.clustering.{DistributedLDAModel, LDA, LDAModel, LocalLDAModel}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,17 +68,14 @@ object LdaPipeline {
     // partition-independent; fit oracles are invariant-booleans.
     val widened = graft.Tables.widened(tokens, graft.Tables.DenseKernelFloor)
     val nonEmpty = widened.filter(size(col("tokens")) > 0) // P7
-    val counts = Vectorize.wordCounts(nonEmpty)
-    val vocab = Vectorize.buildVocab(counts, params.vocabSize)
-    val tf = Vectorize.countVectors(nonEmpty, vocab)
-    val corpusSize = tf.count()
-    val idf = Vectorize.fitIdf(tf).idf.toArray
+    val tfIdf = Vectorize.fit(nonEmpty, params.vocabSize)
+    val corpusSize = tfIdf.numDocs
     // partition count tracks corpus size: EM-LDA runs one GraphX round
     // per iteration, and over-partitioning a small corpus turns the
     // training into pure scheduler overhead (measured 123 s → 74 s on
     // the reference EN corpus going 32 → 8 partitions). At real scale
     // the default parallelism stands.
-    val scaled = Vectorize.tfidfWithFloor(spark, tf, idf)
+    val scaled = Vectorize.flooredTfIdf(nonEmpty, tfIdf.vocab, tfIdf.idf)
     val online = params.algorithm.equalsIgnoreCase("online")
     // ONLINE partitioning tracks the MINIBATCH, not the corpus (r19,
     // guide §2.6 — fill the scheduler, don't flood it): each of the
@@ -122,17 +122,17 @@ object LdaPipeline {
       case other =>
         throw new IllegalArgumentException(s"Only em, online are supported but got $other.")
     }
-    if (params.algorithm.equalsIgnoreCase("online")) {
-      // decomposing telemetry for online fits (r14 verdict #3): the
-      // online optimizer submits a couple of short jobs per iteration
-      // (sampled-minibatch aggregation + update), so the per-job wall
-      // times of the fit decompose it into ~2×maxIter uniform samples
-      // (EM records iterationTimes inside the model instead —
-      // emIterationTimes below)
-      val (model, times) = jobTimes(spark)(lda.fit(corpus))
-      lastOnlineFitJobTimes = Some(times)
-      Fitted(model, vocab, idf, corpus)
-    } else Fitted(lda.fit(corpus), vocab, idf, corpus)
+    val model =
+      if (online) {
+        // decomposing telemetry for online fits (r14 verdict #3): the
+        // online optimizer submits a couple of short jobs per iteration
+        // (sampled-minibatch aggregation + update), so the per-job wall
+        // times of the fit decompose it into ~2×maxIter uniform samples
+        // (EM records iterationTimes inside the model instead —
+        // emIterationTimes below)
+        recordJobTimes(spark)(lda.fit(corpus))
+      } else lda.fit(corpus)
+    Fitted(model, tfIdf.vocab, tfIdf.idf, corpus)
   }
 
   /** Per-job wall times of the most recent ONLINE fit (seconds, job
@@ -141,40 +141,48 @@ object LdaPipeline {
     * artifact decomposes into ~100 uniform per-job costs vs a few
     * stalled jobs (r14 verdict #3: ml06 ran 60.9 s cold in the r14
     * driver bench with nothing to attribute it to). Telemetry only —
-    * never part of a query result. */
-  @volatile var lastOnlineFitJobTimes: Option[Seq[Double]] = None
+    * never part of a query result. Read lazily: see [[FitJobTimes]]. */
+  def lastOnlineFitJobTimes: Option[Seq[Double]] = lastOnlineFit.map(_.seconds)
 
-  /** Runs `f` and returns its result plus the wall time of every Spark
-    * job submitted meanwhile, in job-id order. Durations come from the
-    * scheduler's own event timestamps (SparkListenerJobStart/End.time),
-    * so listener-bus lag cannot skew them; the bus is async, so after
-    * `f` returns we poll briefly for quiescence instead of reaching
-    * into the private listener-bus API. Bench runs queries serially, so
-    * the captured jobs are the fit's own. */
-  private def jobTimes[A](spark: SparkSession)(f: => A): (A, Seq[Double]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val starts = scala.collection.concurrent.TrieMap.empty[Int, Long]
-    val durs = scala.collection.concurrent.TrieMap.empty[Int, Double]
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+  @volatile private[graft] var lastOnlineFit: Option[FitJobTimes] = None
+
+  /** The wall time of every Spark job one fit submits, in job-id order.
+    * The fit's jobs carry a local property naming the recorder, so jobs
+    * of other threads or of later work never count. Durations come from
+    * the scheduler's own event timestamps (SparkListenerJobStart/End
+    * .time), so listener-bus lag cannot skew them. The bus is
+    * asynchronous, so the last job-end events may arrive after the fit
+    * returns: instead of waiting for them, the listener stays attached
+    * and [[seconds]] reads whatever has arrived — by the time a caller
+    * reads it after its next job, everything has. */
+  private[graft] final class FitJobTimes extends SparkListener {
+    private[LdaPipeline] val tag = java.util.UUID.randomUUID().toString
+    private val starts = TrieMap.empty[Int, Long]
+    private val durs = TrieMap.empty[Int, Double]
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      if (j.properties != null && j.properties.getProperty(FitJobTag) == tag)
         starts(j.jobId) = j.time
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        starts.remove(j.jobId).foreach(t0 => durs(j.jobId) = (j.time - t0) / 1e3)
-    }
-    spark.sparkContext.addSparkListener(l)
-    val r = try f finally {
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 20) { // ≤1 s, usually ~100 ms
-        Thread.sleep(50)
-        waited += 1
-        val n = durs.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-      spark.sparkContext.removeSparkListener(l)
-    }
-    (r, durs.toSeq.sortBy(_._1).map(_._2))
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      starts.remove(j.jobId).foreach(t0 => durs(j.jobId) = (j.time - t0) / 1e3)
+
+    def seconds: Seq[Double] = durs.toSeq.sortBy(_._1).map(_._2)
+  }
+
+  private val FitJobTag = "graft.lda.fitJobs"
+
+  /** Runs `f` with a new [[FitJobTimes]] recording its jobs as
+    * [[lastOnlineFit]]; the previous recorder's listener is detached
+    * here, long after its own jobs ended. */
+  private def recordJobTimes[A](spark: SparkSession)(f: => A): A = {
+    val sc = spark.sparkContext
+    val jobs = new FitJobTimes
+    lastOnlineFit.foreach(sc.removeSparkListener)
+    lastOnlineFit = Some(jobs)
+    sc.addSparkListener(jobs)
+    val outer = sc.getLocalProperty(FitJobTag)
+    sc.setLocalProperty(FitJobTag, jobs.tag)
+    try f finally sc.setLocalProperty(FitJobTag, outer)
   }
 
   /** Per-iteration EM training times (seconds) as recorded by the mllib

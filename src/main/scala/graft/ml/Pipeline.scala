@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** End-to-end equivalents of the reference's two entry points
   * (`LDATraining.scala`, `LDALoader.scala`), batched cluster-side.
@@ -15,23 +16,28 @@ object Pipeline {
     "DU" -> "Dutch", "EN" -> "English", "FR" -> "French", "GE" -> "German",
     "IT" -> "Italian", "RU" -> "Russian", "SP" -> "Spanish", "UKR" -> "Ukrainian")
 
-  /** P6 — deterministic contiguous doc ids: distributed range-sort +
-    * zipWithIndex (graft.GlobalIndex) over a stable order — the same
-    * RDD mechanism the reference used, but pinned by book name so ids
-    * don't depend on partitioning (SURVEY.md §2.3 P6, §7 risk 2). No
-    * unpartitioned window anywhere; the repartition keeps the expensive
-    * per-document UDF chain downstream running wide. */
-  def withDocIds(books: DataFrame, orderCol: String = "book_name"): DataFrame = {
-    // the source path joins the order as a unique tiebreak: two books
-    // with the same name (e.g. one filename under two language dirs)
-    // would otherwise make the range-sort order — and hence doc ids —
-    // nondeterministic across lineage recomputations
-    val order =
-      if (books.columns.contains("path") && orderCol != "path")
-        Seq(col(orderCol), col("path"))
-      else Seq(col(orderCol))
-    graft.GlobalIndex.withGlobalIndex(books, order, "doc_id")
-      .repartition(books.sparkSession.sparkContext.defaultParallelism)
+  /** P6 — deterministic contiguous doc ids: the books of a
+    * [[CorpusReader.readBooks]] DataFrame numbered 0..n-1 in
+    * `(book_name, path)` order (Spark's string order), so ids don't
+    * depend on partitioning (SURVEY.md §2.3 P6, §7 risk 2). The path
+    * joins the order as a unique tiebreak: two books with the same
+    * name (one file name under two language dirs) would otherwise tie.
+    * The order comes from the scan's file listing, already on the
+    * driver, and each row looks its id up by path — no sort, no job
+    * and no shuffle; the rows keep readBooks' one spreading shuffle. */
+  def withDocIds(books: DataFrame): DataFrame = {
+    val byteOrder = Ordering.fromLessThan[String] { (a, b) =>
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    }
+    val ids = CorpusReader.listedPaths(books)
+      .sortBy(p => (CorpusReader.bookName(p), p))(Ordering.Tuple2(byteOrder, byteOrder))
+      .zipWithIndex.map { case (p, i) => p -> i.toLong }.toMap
+    val idsB = books.sparkSession.sparkContext.broadcast(ids)
+    val docId = udf { path: String =>
+      idsB.value.getOrElse(path,
+        throw new IllegalStateException(s"$path is not in the corpus's file listing"))
+    }
+    books.withColumn("doc_id", docId(col("path")))
   }
 
   /** The shared prep chain (P2 → P3 → P4 → P7), used identically by

@@ -1,61 +1,117 @@
 package graft.ml
 
-import org.apache.spark.ml.feature.{CountVectorizerModel, IDF, IDFModel}
-import org.apache.spark.ml.linalg.{SparseVector, Vectors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.feature.CountVectorizerModel
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-/** Vectorization stage: frequency-ranked vocabulary (T1), count vectors
-  * (P8), IDF with minDocFreq=2 (A4), and the reference's TF·IDF scaling
-  * with the 0.0001 zero-floor (A5, `LDAClustering.scala:180-192`).
+/** Vectorization stage: frequency-ranked vocabulary (T1), IDF with
+  * minDocFreq=2 (A4) and the reference's TF·IDF scaling with the
+  * 0.0001 zero-floor (A5, `LDAClustering.scala:177-192`), plus raw
+  * count vectors over a fitted vocabulary (P8/P10, classification).
+  *
+  * The fit is ONE shuffle aggregation ([[termStats]]): per term its
+  * occurrences and its document frequency, with the document count
+  * observed in the same job. The idf is then computed on the driver
+  * with mllib `IDF`'s own formula, and the floored TF·IDF vectors come
+  * out of one projection ([[flooredTfIdf]]). The result is bit-identical
+  * to CountVectorizerModel + `IDF(minDocFreq=2).fit` + the floor
+  * (LdaPipelineSpec holds them equal), in two Spark jobs instead of six.
   *
   * Scale notes:
-  *  - word counts are one explode + hash agg (map-side partial combine —
-  *    the Spark-native form of the reference's `reduceByKey`).
+  *  - per-doc term counts fold inside the doc's own task, so the one
+  *    shuffle carries at most one (term, count) pair per doc and term,
+  *    partially combined per term map-side.
   *  - the vocabulary is a top-k (`orderBy.limit` → TakeOrderedAndProject)
-  *    collected to the driver and broadcast via CountVectorizerModel —
-  *    exactly the reference's closure-captured Map, made explicit. The
+  *    collected to the driver and broadcast to the projection — exactly
+  *    the reference's closure-captured Map, made explicit. The
   *    driver-side array is the known ceiling (~tens of millions of
   *    terms); past that the count-vector step becomes a shuffle join of
-  *    exploded tokens against the vocab table.
-  *  - ties in the frequency ranking break by term (ascending) — the
-  *    reference's tie order was partition-dependent (SURVEY.md §7 risk 2);
-  *    we pin it for reproducibility.
+  *    exploded tokens against the vocab table ([[vocabTable]] +
+  *    [[countVectorsViaJoin]]).
+  *  - ties in the frequency ranking break by term (ascending, Spark's
+  *    byte order) — the reference's tie order was partition-dependent
+  *    (SURVEY.md §7 risk 2); we pin it for reproducibility.
   */
 object Vectorize {
 
-  /** A1 — word counts over a tokens ARRAY<STRING> column. */
-  def wordCounts(tokens: DataFrame, tokensCol: String = "tokens"): DataFrame =
-    tokens
-      .select(explode(col(tokensCol)).as("term"))
-      .groupBy("term")
-      .agg(count(lit(1)).as("cnt"))
+  /** A fitted TF·IDF stage: the frequency-ranked vocabulary, mllib's
+    * idf per vocabulary term (0 below minDocFreq=2) and the number of
+    * documents the idf was fitted over. */
+  final case class TfIdfFit(vocab: Array[String], idf: Array[Double], numDocs: Long)
 
-  /** T1 — frequency-ranked vocabulary, index = rank. Fails loudly past
-    * the broadcast cap instead of silently attempting a multi-GB driver
-    * collect — callers above the cap use [[vocabTable]] +
-    * [[countVectorsViaJoin]]. */
-  def buildVocab(counts: DataFrame, vocabSize: Int): Array[String] = {
+  /** Occurrences of each distinct token of one document. */
+  private val docTermCounts = udf { tokens: Seq[String] =>
+    val counts = scala.collection.mutable.HashMap.empty[String, Long]
+    if (tokens != null) tokens.foreach(t => counts(t) = counts.getOrElse(t, 0L) + 1L)
+    counts.toSeq
+  }
+
+  /** A1 + document frequency — one row per term over a tokens
+    * ARRAY<STRING> column: `cnt` (occurrences in the corpus) and `df`
+    * (rows containing the term), in one map-side-combined shuffle. */
+  def termStats(tokens: DataFrame, tokensCol: String = "tokens"): DataFrame =
+    tokens
+      .select(explode(docTermCounts(col(tokensCol))).as("tc"))
+      .groupBy(col("tc._1").as("term"))
+      .agg(sum(col("tc._2")).as("cnt"), count(lit(1)).as("df"))
+
+  /** T1 + A4 in one pass: the `vocabSize` most frequent terms (ties by
+    * term) with their idf. The document count m is observed on the
+    * same scan, and idf = ln((m+1)/(df+1)) for df ≥ 2, else 0 — mllib
+    * `IDF`'s formula and arithmetic, so the weights are bit-identical.
+    * Fails loudly past the broadcast cap instead of silently attempting
+    * a multi-GB driver collect — callers above the cap use
+    * [[vocabTable]] + [[countVectorsViaJoin]]. */
+  def fit(tokens: DataFrame, vocabSize: Int, tokensCol: String = "tokens"): TfIdfFit = {
     require(vocabSize <= broadcastVocabCap,
       s"vocabSize=$vocabSize exceeds the driver/broadcast ceiling " +
         s"($broadcastVocabCap); use vocabTable + countVectorsViaJoin for " +
         "the distributed vocabulary path")
-    counts
+    val docs = Observation()
+    val top = termStats(tokens.observe(docs, count(lit(1)).as("m")), tokensCol)
       .orderBy(col("cnt").desc, col("term"))
       .limit(vocabSize)
-      .select("term")
+      .select("term", "df")
       .collect()
-      .map(_.getString(0))
+    val m = docs.get("m").asInstanceOf[Long]
+    val idf = top.map { r =>
+      val df = r.getLong(1)
+      if (df >= 2) math.log((m + 1.0) / (df + 1.0)) else 0.0
+    }
+    TfIdfFit(top.map(_.getString(0)), idf, m)
   }
 
-  /** P8 — count vectors of dim vocab.length over the tokens column.
-    * CountVectorizerModel broadcasts the vocab and emits SparseVector
-    * with ascending indices — the reference's representation.
-    *
-    * This is the BELOW-the-cap path: the vocab lives in one driver/
-    * executor array. Past [[broadcastVocabCap]] terms use
-    * [[vocabTable]] + [[countVectorsViaJoin]] instead — identical
-    * output (VectorizeFallbackSpec proves it), distributed vocab. */
+  /** P8 + A5 in one projection: per doc, the count of each vocabulary
+    * term times its idf, where idf == 0.0 is floored to 0.0001 — the
+    * reference substitutes 0.0001 instead of zeroing the term
+    * (`LDAClustering.scala:184-187`), so minDocFreq-filtered terms keep
+    * a tiny weight (`IDFModel.transform` would multiply by true 0).
+    * SparseVector of dim vocab.length with ascending indices;
+    * out-of-vocabulary tokens drop. */
+  def flooredTfIdf(df: DataFrame, vocab: Array[String], idf: Array[Double],
+      tokensCol: String = "tokens", outCol: String = "features"): DataFrame = {
+    val weights = idf.map(w => if (w == 0.0) 0.0001 else w)
+    val b = df.sparkSession.sparkContext.broadcast((vocab.zipWithIndex.toMap, weights))
+    val size = vocab.length
+    val scale = udf { tokens: Seq[String] =>
+      val (index, w) = b.value
+      val counts = scala.collection.mutable.HashMap.empty[Int, Double]
+      tokens.foreach(t => index.get(t).foreach(i => counts(i) = counts.getOrElse(i, 0.0) + 1.0))
+      val idx = counts.keys.toArray.sorted
+      Vectors.sparse(size, idx, idx.map(i => counts(i) * w(i))): Vector
+    }
+    df.withColumn(outCol, scale(col(tokensCol)))
+  }
+
+  /** P8/P10 — raw count vectors of dim vocab.length over the tokens
+    * column (classification's features: the reference applies no IDF at
+    * inference). CountVectorizerModel broadcasts the vocab and emits
+    * SparseVector with ascending indices — the reference's
+    * representation. This is the BELOW-the-cap path; past
+    * [[broadcastVocabCap]] terms use [[vocabTable]] +
+    * [[countVectorsViaJoin]] instead — identical output
+    * (VectorizeFallbackSpec proves it), distributed vocab. */
   def countVectors(df: DataFrame, vocab: Array[String],
       tokensCol: String = "tokens", outCol: String = "tf"): DataFrame =
     new CountVectorizerModel(vocab)
@@ -70,13 +126,14 @@ object Vectorize {
     * exceeds it; callers switch to the join path above this. */
   val broadcastVocabCap: Int = 4 * 1000 * 1000
 
-  /** T1 as a DISTRIBUTED table (term, vid): same frequency ranking and
-    * (cnt DESC, term ASC) tie order as [[buildVocab]], but the mapping
-    * never leaves the cluster — vid comes from a range-sort +
-    * zipWithIndex (graft.GlobalIndex), not a driver collect. */
-  def vocabTable(counts: DataFrame, vocabSize: Int): DataFrame =
+  /** T1 as a DISTRIBUTED table (term, vid) over [[termStats]]: same
+    * frequency ranking and (cnt DESC, term ASC) tie order as [[fit]],
+    * but the mapping never leaves the cluster — vid comes from a
+    * range-sort + zipWithIndex (graft.GlobalIndex), not a driver
+    * collect. */
+  def vocabTable(stats: DataFrame, vocabSize: Int): DataFrame =
     graft.GlobalIndex
-      .withGlobalIndex(counts, Seq(col("cnt").desc, col("term")), "vid")
+      .withGlobalIndex(stats, Seq(col("cnt").desc, col("term")), "vid")
       .filter(col("vid") < vocabSize)
       .select(col("term"), col("vid"))
 
@@ -103,52 +160,21 @@ object Vectorize {
         .as("__cv_ic"))
     val assemble = udf { ic: Seq[org.apache.spark.sql.Row] =>
       if (ic == null)
-        Vectors.sparse(vocabCount, Array.empty[Int], Array.empty[Double])
-          : org.apache.spark.ml.linalg.Vector
+        Vectors.sparse(vocabCount, Array.empty[Int], Array.empty[Double]): Vector
       else
         Vectors.sparse(vocabCount,
-          ic.map(_.getInt(0)).toArray, ic.map(_.getDouble(1)).toArray)
-          : org.apache.spark.ml.linalg.Vector
+          ic.map(_.getInt(0)).toArray, ic.map(_.getDouble(1)).toArray): Vector
     }
     df.join(lists, df(idCol) === lists("__cv_doc"), "left")
       .withColumn(outCol, assemble(col("__cv_ic")))
       .drop("__cv_doc", "__cv_ic")
   }
 
-  /** A4 — IDF with the reference's minDocFreq=2
-    * (`LDAClustering.scala:177`): idf = ln((m+1)/(df+1)), zeroed for
-    * terms in fewer than 2 docs. */
-  def fitIdf(df: DataFrame, tfCol: String = "tf"): IDFModel =
-    new IDF().setMinDocFreq(2).setInputCol(tfCol).setOutputCol("idf_out").fit(df)
-
-  /** A5 — TF·IDF with the zero-floor quirk: where idf == 0.0 the
-    * reference substitutes 0.0001 instead of zeroing the term
-    * (`LDAClustering.scala:184-187`), so minDocFreq-filtered terms keep
-    * a tiny weight. `IDFModel.transform` would multiply by true 0 —
-    * hence this custom scaling. */
-  def tfidfWithFloor(spark: SparkSession, df: DataFrame, idf: Array[Double],
-      tfCol: String = "tf", outCol: String = "features"): DataFrame = {
-    val idfB = spark.sparkContext.broadcast(idf)
-    val scale = udf { (v: org.apache.spark.ml.linalg.Vector) =>
-      val sv = v.toSparse
-      val vals = new Array[Double](sv.indices.length)
-      var i = 0
-      while (i < sv.indices.length) {
-        val idfVal = idfB.value(sv.indices(i))
-        val f = if (idfVal == 0.0) 0.0001 else idfVal
-        vals(i) = sv.values(i) * f
-        i += 1
-      }
-      Vectors.sparse(sv.size, sv.indices, vals): org.apache.spark.ml.linalg.Vector
-    }
-    df.withColumn(outCol, scale(col(tfCol)))
-  }
-
   /** A3 — the reference's "token count": number of *active* (distinct)
     * terms per doc summed over the corpus (`LDAClustering.scala:197`),
     * not raw occurrences. */
   def activeTermCount(df: DataFrame, vecCol: String = "features"): Long = {
-    val numActives = udf((v: org.apache.spark.ml.linalg.Vector) => v.numActives)
+    val numActives = udf((v: Vector) => v.numActives)
     df.agg(sum(numActives(col(vecCol)))).head().getLong(0)
   }
 }

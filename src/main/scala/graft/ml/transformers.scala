@@ -73,7 +73,9 @@ object TokenizeFilterStem extends DefaultParamsReadable[TokenizeFilterStem]
 
 /** M2 — frequency-ranked vocabulary + count vectors + IDF(minDocFreq=2)
   * + the reference's 0.0001 zero-floor TF·IDF (T1/P8/A4/A5) as one
-  * Estimator producing a reusable, persistable model. */
+  * Estimator producing a reusable, persistable model — the same
+  * one-pass [[Vectorize.fit]] and [[Vectorize.flooredTfIdf]] projection
+  * that LdaPipeline.train runs. */
 class TfIdfFloorVectorizer(override val uid: String)
     extends Estimator[TfIdfFloorModel] with DefaultParamsWritable {
   def this() = this(Identifiable.randomUID("graftTfIdfFloor"))
@@ -87,13 +89,9 @@ class TfIdfFloorVectorizer(override val uid: String)
   def setVocabSize(v: Int): this.type = set(vocabSize, v)
 
   override def fit(ds: Dataset[_]): TfIdfFloorModel = {
-    val df = ds.toDF()
-    val counts = Vectorize.wordCounts(df, $(tokensCol))
-    val vocab = Vectorize.buildVocab(counts, $(vocabSize))
-    val tf = Vectorize.countVectors(df, vocab, $(tokensCol), "__graft_tf")
-    val idf = Vectorize.fitIdf(tf, "__graft_tf").idf.toArray
+    val fit = Vectorize.fit(ds.toDF(), $(vocabSize), $(tokensCol))
     val m = new TfIdfFloorModel(Identifiable.randomUID("graftTfIdfFloorModel"))
-      .setVocab(vocab).setIdf(idf)
+      .setVocab(fit.vocab).setIdf(fit.idf)
       .setTokensCol($(tokensCol)).setOutputCol($(outputCol))
     m.setParent(this)
   }
@@ -134,11 +132,8 @@ class TfIdfFloorModel(override val uid: String)
   def vocab: Array[String] = $(vocabulary)
   def idf: Array[Double] = $(idfWeights)
 
-  override def transform(ds: Dataset[_]): DataFrame = {
-    val tf = Vectorize.countVectors(ds.toDF(), vocab, $(tokensCol), "__graft_tf")
-    Vectorize.tfidfWithFloor(ds.sparkSession, tf, idf, "__graft_tf", $(outputCol))
-      .drop("__graft_tf")
-  }
+  override def transform(ds: Dataset[_]): DataFrame =
+    Vectorize.flooredTfIdf(ds.toDF(), vocab, idf, $(tokensCol), $(outputCol))
 
   override def transformSchema(schema: StructType): StructType =
     schema.add(StructField($(outputCol),

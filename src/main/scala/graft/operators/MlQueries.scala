@@ -326,8 +326,11 @@ object MlQueries {
     * LdaPipeline.lastOnlineFitJobTimes). The ml04 idiom for the online
     * optimizer (r14 verdict #3: ml06 recorded a 60.9 s cold driver
     * sample with no telemetry to adjudicate it); Bench keys its
-    * iter-median guard to this via Bench.iterTelemetry. */
-  @volatile var ml06IterTimes: Option[Seq[Double]] = None
+    * iter-median guard to this via Bench.iterTelemetry. Read lazily
+    * from the fit's job recorder, which keeps collecting the fit's last
+    * job-end events after the fit returns. */
+  def ml06IterTimes: Option[Seq[Double]] = ml06FitJobs.map(_.seconds)
+  @volatile private var ml06FitJobs: Option[LdaPipeline.FitJobTimes] = None
 
   /** ml06 — A6 on the ONLINE optimizer at the reference's FULL training
     * configuration (k=5, 50 iterations, auto α/β, the `0.05 +
@@ -354,7 +357,7 @@ object MlQueries {
       .select(col("doc_id"), split(col("text"), " ").as("tokens"))
     val fitted = LdaPipeline.train(s, tokens,
       LdaPipeline.Params(k = 5, maxIterations = 50, algorithm = "online", seed = 42L))
-    ml06IterTimes = LdaPipeline.lastOnlineFitJobTimes
+    ml06FitJobs = LdaPipeline.lastOnlineFit
     // per-doc posterior invariants in ONE pass over the cached corpus:
     // booleans reduced with min() (false < true ⇒ min == AND), so the
     // aggregate is map-side combinable — no per-doc rows move

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
 /** Structured Streaming surface over the `events` table. The reference
   * has no streaming (SURVEY.md §1.3) — declared extension.
   *
@@ -196,13 +198,23 @@ object Streams {
     * deployments (picked ONCE per query — changing it later needs a
     * checkpoint reset). */
   private[graft] def streamPartsValue(s: SparkSession, d: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
+    streamPartsOverride(sys.env.get("SPARK_GRAFT_STREAM_PARTS")).getOrElse {
       val bytes =
         try java.nio.file.Files.size(java.nio.file.Paths.get(s"$d/events.parquet"))
-        catch { case _: Throwable => 0L }
+        catch { case NonFatal(_) => 0L }
       math.max(4L, math.min(s.sparkContext.defaultParallelism.toLong,
         bytes >> 20)).toInt
     }
+
+  /** The SPARK_GRAFT_STREAM_PARTS override: a positive integer, or a
+    * failure that names the variable (not a bare NumberFormatException
+    * at query setup). */
+  private[graft] def streamPartsOverride(v: Option[String]): Option[Int] =
+    v.map { raw =>
+      raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_PARTS must be a positive integer, got '$raw'"))
+    }
+
   private def streamParts(s: SparkSession, d: String): (String, String) =
     "spark.sql.shuffle.partitions" -> streamPartsValue(s, d).toString
 

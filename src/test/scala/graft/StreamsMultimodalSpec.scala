@@ -889,4 +889,16 @@ class StreamsMultimodalSpec extends AnyFunSuite {
     assert(lines.contains("b1.txt, b2.txt, b3.txt"))
     assert(lines.contains("b4.txt,"))
   }
+
+  test("SPARK_GRAFT_STREAM_PARTS: a malformed value fails naming the variable") {
+    import streaming.Streams.streamPartsOverride
+    assert(streamPartsOverride(None).isEmpty)
+    assert(streamPartsOverride(Some("12")).contains(12))
+    assert(streamPartsOverride(Some(" 8 ")).contains(8))
+    Seq("", "abc", "4x", "0", "-2", "3.5").foreach { bad =>
+      val e = intercept[IllegalArgumentException](streamPartsOverride(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_PARTS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }

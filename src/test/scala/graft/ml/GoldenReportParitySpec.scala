@@ -135,7 +135,7 @@ class GoldenReportParitySpec extends AnyFunSuite {
   }
 
   test("render() reproduces the reference golden byte-for-byte") {
-    assume(Files.exists(goldenPath), "reference golden not present")
+    assume(Files.exists(goldenPath), s"reference golden $goldenPath not present")
     val raw = new String(Files.readAllBytes(goldenPath), StandardCharsets.UTF_8)
     val (k, books, topics) = parseGolden(raw)
     val rendered = GoldenReport.render(k, books, topics)
@@ -156,7 +156,7 @@ class GoldenReportParitySpec extends AnyFunSuite {
     // locked at real-report scale (17 books, 5 topics, every list-ending
     // shape the corpus produces). Regenerate deliberately with
     // -Dgraft.regen.golden=true after an intentional format change.
-    assume(Files.exists(goldenPath), "reference golden not present")
+    assume(Files.exists(goldenPath), s"reference golden $goldenPath not present")
     val raw = new String(Files.readAllBytes(goldenPath), StandardCharsets.UTF_8)
     val (k, books, topics) = parseGolden(raw)
     val rendered = GoldenReport.render(k, books, topics, GoldenReport.HeadEra)

@@ -1,6 +1,9 @@
 package graft.ml
 
 import graft.TestSpark
+import org.apache.spark.ml.feature.{CountVectorizerModel, IDF}
+import org.apache.spark.ml.linalg.SparseVector
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,14 +41,11 @@ class LdaPipelineSpec extends AnyFunSuite {
 
   test("A5: TF-IDF zero-floor substitutes 0.0001 for idf==0 terms") {
     val tok = tokens
-    val counts = Vectorize.wordCounts(tok)
-    val vocab = Vectorize.buildVocab(counts, 1000)
-    val tf = Vectorize.countVectors(tok, vocab)
-    val idfModel = Vectorize.fitIdf(tf)
-    val idf = idfModel.idf.toArray
+    val fit = Vectorize.fit(tok, 1000)
+    val idf = fit.idf
     // minDocFreq=2 zeroes single-doc terms in mllib's idf vector
     assert(idf.contains(0.0), "expected some idf==0 terms on this corpus")
-    val scaled = Vectorize.tfidfWithFloor(spark, tf, idf)
+    val scaled = Vectorize.flooredTfIdf(tok, fit.vocab, idf)
     val vecs = scaled.select("features").collect()
       .map(_.getAs[org.apache.spark.ml.linalg.Vector](0))
     val zeroIdx = idf.indexWhere(_ == 0.0)
@@ -55,11 +55,82 @@ class LdaPipelineSpec extends AnyFunSuite {
     }
     assert(floored.nonEmpty && floored.forall(x => x > 0 && x <= 0.0001 * 10),
       "idf==0 terms must carry count*0.0001, not 0")
-    // idf formula check: ln((m+1)/(df+1)) for a df>=2 term
-    val m = tok.count().toDouble
-    val dfTbl = tok.select(explode(col("tokens")).as("t"), lit(1))
-      .distinct() // not exact df but vocabulary smoke
-    assert(m == 5.0)
+    // idf formula for EVERY term: ln((m+1)/(df+1)) when df >= 2, else 0,
+    // with m and df counted here from the token lists
+    val docs = tok.select("tokens").collect().map(_.getSeq[String](0).toSet)
+    val m = docs.length.toLong
+    assert(m == 5L && fit.numDocs == m)
+    assert(fit.vocab.length == docs.flatten.toSet.size, "vocab must hold every term")
+    fit.vocab.zip(idf).foreach { case (term, w) =>
+      val df = docs.count(_.contains(term)).toLong
+      val want = if (df >= 2) math.log((m + 1.0) / (df + 1.0)) else 0.0
+      assert(w == want, s"idf of '$term' (df=$df): got $w, want $want")
+    }
+  }
+
+  /** The vectorization as mllib computes it — CountVectorizerModel over
+    * a (cnt DESC, term ASC) vocabulary, IDF(minDocFreq=2), then the
+    * 0.0001 floor — kept as the reference the one-pass fit must match. */
+  private def referenceTfIdf(tok: DataFrame, vocabSize: Int)
+      : (Array[String], Array[Double], Map[Long, SparseVector]) = {
+    val vocab = tok.select(explode(col("tokens")).as("term"))
+      .groupBy("term").agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("term")).limit(vocabSize)
+      .collect().map(_.getString(0))
+    val tf = new CountVectorizerModel(vocab)
+      .setInputCol("tokens").setOutputCol("tf").transform(tok)
+    val idf = new IDF().setMinDocFreq(2).setInputCol("tf").setOutputCol("idf_out")
+      .fit(tf).idf.toArray
+    val feats = tf.select("doc_id", "tf").collect().map { r =>
+      val v = r.getAs[org.apache.spark.ml.linalg.Vector](1).toSparse
+      val w = v.indices.indices.map { k =>
+        val f = idf(v.indices(k))
+        v.values(k) * (if (f == 0.0) 0.0001 else f)
+      }.toArray
+      r.getLong(0) -> new SparseVector(v.size, v.indices, w)
+    }.toMap
+    (vocab, idf, feats)
+  }
+
+  private def bits(xs: Array[Double]): Seq[Long] =
+    xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+
+  private def assertMatchesReference(tok: DataFrame, vocabSize: Int): Unit = {
+    val (refVocab, refIdf, refFeats) = referenceTfIdf(tok, vocabSize)
+    val fit = Vectorize.fit(tok, vocabSize)
+    assert(fit.vocab.toSeq == refVocab.toSeq, "vocab order")
+    assert(bits(fit.idf) == bits(refIdf), "idf array")
+    val feats = Vectorize.flooredTfIdf(tok, fit.vocab, fit.idf)
+      .select("doc_id", "features").collect()
+      .map(r => r.getLong(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toSparse)
+      .toMap
+    assert(feats.keySet == refFeats.keySet)
+    refFeats.foreach { case (id, ref) =>
+      val got = feats(id)
+      assert(got.size == ref.size && got.indices.toSeq == ref.indices.toSeq &&
+        bits(got.values) == bits(ref.values), s"features of doc $id: $got vs $ref")
+    }
+  }
+
+  test("A4/A5: one-pass fit is bit-identical to CountVectorizer + mllib IDF + floor") {
+    assertMatchesReference(tokens, 1000)
+  }
+
+  test("A4/A5: one-pass fit matches the reference under tied term counts") {
+    // every term occurs exactly twice or exactly three times, so the
+    // vocabulary order is decided by the term tiebreak alone; the cut
+    // at vocabSize 5 falls inside a tie group and leaves docs with
+    // out-of-vocab tokens
+    val tied = Seq(
+      (0L, Seq("pear", "fig", "kiwi", "lime")),
+      (1L, Seq("pear", "fig", "date", "plum", "lime")),
+      (2L, Seq("kiwi", "date", "plum", "lime", "yuzu")),
+      (3L, Seq("yuzu", "apple", "apple", "fig", "pear")),
+      (4L, Seq("kiwi", "date", "plum", "yuzu")))
+      .toDF("doc_id", "tokens")
+    assertMatchesReference(tied, 1000)
+    assertMatchesReference(tied, 5)
+    assertMatchesReference(tied, 1)
   }
 
   test("A6/A10: EM-LDA on TF-IDF weights; argmax last-wins; seed-stable") {
@@ -101,6 +172,15 @@ class LdaPipelineSpec extends AnyFunSuite {
       LdaPipeline.Params(k = 2, maxIterations = 5, algorithm = "online", seed = 7L))
     assert(fitted.model.isInstanceOf[org.apache.spark.ml.clustering.LocalLDAModel])
     assert(LdaPipeline.describeTopics(spark, fitted, 3).count() == 2)
+    // per-job telemetry (ml06's): the fit returns without waiting for
+    // the listener bus; the recorder fills in as the events arrive, at
+    // least one job per iteration
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    eventually(timeout(10.seconds)) {
+      val times = LdaPipeline.lastOnlineFitJobTimes.getOrElse(Nil)
+      assert(times.size >= 5 && times.forall(_ >= 0.0), times)
+    }
   }
 
   test("K1/K2/S4/S5: save and load round-trip") {

@@ -50,9 +50,7 @@ class StagedPersistenceSpec extends AnyFunSuite {
 
     // end-to-end re-transform: loaded artifact vs the in-memory chain
     val fromBundle = loaded.transform(toks.select("doc_id", "tokens"))
-    val inMemory = LdaPipeline.assignTopics(fitted,
-      Vectorize.tfidfWithFloor(spark,
-        Vectorize.countVectors(toks, fitted.vocab), fitted.idf))
+    val inMemory = LdaPipeline.assignTopics(fitted, fitted.corpus)
 
     // features: exact — same vocab, same counts, same floored idf
     assert(vecsOf(fromBundle, "features") == vecsOf(inMemory, "features"),

@@ -19,14 +19,14 @@ class VectorizeFallbackSpec extends AnyFunSuite {
   test("countVectorsViaJoin equals broadcast countVectors (full vocab)") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("tokens"))
-    val counts = Vectorize.wordCounts(docs)
+    val stats = Vectorize.termStats(docs)
 
-    val vocab = Vectorize.buildVocab(counts, 1000)
+    val vocab = Vectorize.fit(docs, 1000).vocab
     val viaBroadcast = Vectorize.countVectors(docs, vocab)
       .select("doc_id", "tf").collect()
       .map(r => r.getLong(0) -> r.getAs[Vector]("tf")).toMap
 
-    val vt = Vectorize.vocabTable(counts, 1000)
+    val vt = Vectorize.vocabTable(stats, 1000)
     val viaJoin = Vectorize.countVectorsViaJoin(docs, vt, vocab.length)
       .select("doc_id", "tf").collect()
       .map(r => r.getLong(0) -> r.getAs[Vector]("tf")).toMap
@@ -40,16 +40,16 @@ class VectorizeFallbackSpec extends AnyFunSuite {
   test("join path handles docs with zero in-vocab tokens (tiny vocab)") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("tokens"))
-    val counts = Vectorize.wordCounts(docs)
+    val stats = Vectorize.termStats(docs)
 
     // vocab of 2: most docs still hit it, but if any doc misses, both
     // paths must agree on the empty vector; also checks dim plumbing
-    val vocab = Vectorize.buildVocab(counts, 2)
+    val vocab = Vectorize.fit(docs, 2).vocab
     val viaBroadcast = Vectorize.countVectors(docs, vocab)
       .select("doc_id", "tf").collect()
       .map(r => r.getLong(0) -> r.getAs[Vector]("tf")).toMap
     val viaJoin = Vectorize
-      .countVectorsViaJoin(docs, Vectorize.vocabTable(counts, 2), vocab.length)
+      .countVectorsViaJoin(docs, Vectorize.vocabTable(stats, 2), vocab.length)
       .select("doc_id", "tf").collect()
       .map(r => r.getLong(0) -> r.getAs[Vector]("tf")).toMap
 

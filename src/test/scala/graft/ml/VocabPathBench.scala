@@ -12,22 +12,22 @@ object VocabPathBench {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("tokens")).cache()
     docs.count()
-    val counts = Vectorize.wordCounts(docs).cache()
-    val n = counts.count()
+    val stats = Vectorize.termStats(docs).cache()
+    val n = stats.count()
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
       f
       println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     // warmup both
-    Vectorize.countVectors(docs, Vectorize.buildVocab(counts, n.toInt)).count()
-    Vectorize.countVectorsViaJoin(docs, Vectorize.vocabTable(counts, n.toInt), n.toInt).count()
+    Vectorize.countVectors(docs, Vectorize.fit(docs, n.toInt).vocab).count()
+    Vectorize.countVectorsViaJoin(docs, Vectorize.vocabTable(stats, n.toInt), n.toInt).count()
     time(s"broadcast (vocab=$n)") {
-      Vectorize.countVectors(docs, Vectorize.buildVocab(counts, n.toInt))
+      Vectorize.countVectors(docs, Vectorize.fit(docs, n.toInt).vocab)
         .write.format("noop").mode("overwrite").save()
     }
     time(s"join      (vocab=$n)") {
-      Vectorize.countVectorsViaJoin(docs, Vectorize.vocabTable(counts, n.toInt), n.toInt)
+      Vectorize.countVectorsViaJoin(docs, Vectorize.vocabTable(stats, n.toInt), n.toInt)
         .write.format("noop").mode("overwrite").save()
     }
   }
